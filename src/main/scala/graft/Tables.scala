@@ -138,8 +138,8 @@ object Tables {
     *
     * Default is `localCheckpoint(eager=false)`: executor-local blocks, no
     * DFS round-trip — right for local mode and benchmarks. Its cluster
-    * caveat (VERDICT r6 item 3): executor loss discards the blocks AND the
-    * truncated lineage, failing the job. Setting
+    * caveat: executor loss discards the blocks AND the truncated
+    * lineage, failing the job. Setting
     * `spark.graft.checkpointDir=<dfs path>` switches every pin in the
     * engine to a RELIABLE `checkpoint()` into that directory, the
     * fault-tolerant form a 1000-executor run wants; one config flip, no
@@ -151,26 +151,14 @@ object Tables {
     * inside whatever action first touches it. Use it when the pinned
     * frame feeds ≥2 BROADCAST subtrees of one query: Spark builds
     * broadcast relations on a thread pool, so several broadcast-build
-    * jobs can start while the pin's blocks are still uncomputed and
-    * each races to compute the same partitions (getOrCompute dedups
-    * storage, not work — r15, measured on agg_mad: 5.5 s one-shot vs
-    * 2.5 s staged for identical stages). Eager materialization is a
-    * scheduling barrier, so keep lazy pins in iterative chains whose
-    * rounds are tiny (DESIGN §14.1: barriers cost more than the work
-    * they dedup when each round is a sub-100 ms stage). */
-  /** Dev-only pre-pin plan recorder (VERDICT r15 #4/#8): a pin makes
-    * the key-level plan dump opaque — the executed plan shows only a
-    * Scan ExistingRDD where the joins/windows happen inside the pin's
-    * materialization. When a recorder buffer is installed (KeyPlan
-    * installs one), [[pin]] appends each frame BEFORE checkpointing so
-    * plan audits can dump the pre-pin trees too. Never set outside dev
-    * tools; null (the default) is a no-op on the query path. */
-  private[graft] val pinRecorder =
-    new ThreadLocal[scala.collection.mutable.Buffer[DataFrame]]
-
+    * jobs can start while the pin's blocks are still uncomputed, and
+    * each recomputes the same partitions (getOrCompute dedups storage,
+    * not work). An eager pin is a scheduling barrier: those builds
+    * start only once the blocks exist, so each partition is computed
+    * once. Keep lazy pins in iterative chains whose rounds are tiny:
+    * there a barrier costs more than the work it dedups (DESIGN
+    * §14.1). */
   def pin(df: DataFrame, eager: Boolean): DataFrame = {
-    val rec = pinRecorder.get()
-    if (rec != null) rec += df
     val s = df.sparkSession
     s.conf.getOption("spark.graft.checkpointDir") match {
       case Some(dir) if dir.nonEmpty =>

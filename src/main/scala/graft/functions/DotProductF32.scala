@@ -1,5 +1,6 @@
 package graft.functions
 
+import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -92,4 +93,17 @@ case class DotProductF32(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProductF32 =
     copy(left = newLeft, right = newRight)
+}
+
+object DotProductF32 {
+  /** The kernel as a Column, for operators that build plans with the
+    * DataFrame API. */
+  def dot(a: Column, b: Column): Column = GraftBridge.column(
+    DotProductF32(GraftBridge.expression(a), GraftBridge.expression(b)))
+
+  /** DuckDB oracle text of [[dot]]: the same double-accumulated
+    * element-wise product sum. */
+  def oDot(a: String, b: String): String =
+    s"list_sum(list_transform(range(1, len($a) + 1), " +
+      s"i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"
 }

@@ -41,7 +41,7 @@ object GraphOps {
     // pinned (r15): edges feeds FOUR subtree references (the degree
     // agg, the join's probe side, and both node-set branches) whose
     // exchange subtrees differ, so nothing above the distinct was
-    // reused — JobProbe caught the row-scaled lineitem distinct
+    // reused — a per-job trace caught the row-scaled lineitem distinct
     // executing twice per run (two identical 4.9 MB shuffle writes)
     // under the withDeg and nodes pins. One pin, every consumer reads
     // blocks — the ccCore edge-list discipline applied here.
@@ -94,7 +94,7 @@ object GraphOps {
     "graph_bfs_hops" -> ((s: SparkSession, d: String) => {
       // union-of-two-selects is safe HERE (r15 audit): both branches
       // are bare projections of the SAME distinct exchange, so
-      // exchange reuse dedups the row-scaled subtree (JobProbe: one
+      // exchange reuse dedups the row-scaled subtree (traced: one
       // distinct write, read twice) — unlike pagerank's four
       // differing consumers, which needed the pin
       val e = t(s, d, "lineitem")

@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.functions.DotProductF32.{dot, oDot}
 
 /** Hybrid retrieval (SURVEY §2.11) — the RAG-serving query shape: a
   * lexical retriever and a dense retriever each produce a TRUNCATED
@@ -28,16 +29,6 @@ import graft.Tables._
 object SearchOps {
   private val K = 50      // per-retriever candidate list length
   private val RrfK0 = 60  // RRF dampening constant (Cormack et al.)
-
-  private def dot(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(graft.functions.DotProductF32(
-      GraftBridge.expression(a), GraftBridge.expression(b)))
-  }
-
-  private def oDot(a: String, b: String): String =
-    s"list_sum(list_transform(range(1, len($a) + 1), " +
-      s"i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"
 
   val queries: Map[String, QFn] = Map(
     // BM25 ranking (Robertson et al.) — the lexical retriever upgraded

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.Tables._
+import graft.functions.DotProductF32.{dot, oDot}
 
 /** Embedding-similarity operators beyond brute-force kNN (driver north
   * star): cosine near-dup pairs and a random-hyperplane LSH-bucketed ANN —
@@ -78,12 +79,6 @@ object SimilarityOps {
           greatest(col("ia"), col("ib")).as("b"),
           when(ordered, col("xa")).otherwise(col("xb")).as("va"),
           when(ordered, col("xb")).otherwise(col("xa")).as("vb")): _*)
-  }
-
-  private def dot(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(graft.functions.DotProductF32(
-      GraftBridge.expression(a), GraftBridge.expression(b)))
   }
 
   /** Deterministic random hyperplanes: 8 tables × 4 bits, seeded. */
@@ -161,7 +156,7 @@ object SimilarityOps {
     // SCALE CONTRACT (r11, VERDICT r10 #6): recall-1 at cos ≥ 0.3 on
     // near-uniform unit vectors is Θ(N²) compute BY SEMANTICS — the
     // plan bounds memory, nothing can bound work. The measured
-    // renegotiation trade (KnnScaleProbe, DESIGN §3/§11): the
+    // renegotiation trade (scale ladder, DESIGN §3/§11): the
     // IVF-cell-partitioned form stays near-flat where exact grows
     // quadratically (2.6→7.2 s vs 3.3→34.7 s over 4k→16k vectors,
     // crossover ≈4k at nlist=16) at 0.83 cross-cell edge recall
@@ -206,7 +201,7 @@ object SimilarityOps {
     // exact graph (2.0 s vs 1.7 s steady at p=3) — the fixed training
     // agg outweighs the N²→N²/nlist·p² pair cut at tiny N; the
     // crossover is where N²·d work dominates the (cell × dim)
-    // training agg (measured ≈4k vectors, KnnScaleProbe).
+    // training agg (measured ≈4k vectors on a scale ladder).
     "knn_graph_ivf" -> ((s: SparkSession, d: String) => {
       val emb = t(s, d, "embeddings")
       knnGraphMultiProbe(emb, 3).orderBy("node", "rn")
@@ -380,10 +375,6 @@ object SimilarityOps {
         round6(dot(col("va"), col("vb"))).as("cos"))
     knnGraphFromPairs(pairs, k)
   }
-
-  private def oDot(a: String, b: String): String =
-    s"list_sum(list_transform(range(1, len($a) + 1), " +
-      s"i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"
 
   val oracle: Map[String, String] = Map(
     "knn_graph" ->

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables._
+import graft.functions.DotProductF32.{dot, oDot}
 
 /** SURVEY §2.8 LLM-data-pipeline operators (driver north star): text
   * analysis, exact + approximate dedup, similarity search, multimodal join.
@@ -42,19 +43,6 @@ import graft.Tables._
 object TextSimOps {
   /** τ as integer percent — threshold compares stay in exact int space. */
   private val TauPct = 90
-
-  /** Fixed-order double dot product of two float array columns — the
-    * codegen'd [[graft.functions.DotProductF32]] (identical semantics to
-    * aggregate(zip_with(...)) but inside whole-stage codegen). */
-  private def dot(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.GraftBridge
-    GraftBridge.column(graft.functions.DotProductF32(
-      GraftBridge.expression(a), GraftBridge.expression(b)))
-  }
-
-  private def oDot(a: String, b: String): String =
-    s"list_sum(list_transform(range(1, len($a) + 1), " +
-      s"i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))"
 
   /** |A ∩ B| of two sorted null-free arrays — the codegen'd merge scan
     * [[graft.functions.SortedIntersectCount]] (≡ size(array_intersect)
@@ -329,7 +317,7 @@ object TextSimOps {
     * the last exchange; RangePartitioning keeps equal da in one
     * partition and AQE coalescing of range output is adjacent-merge,
     * order-preserving). Measured sf0.1 local[32]: 4.1–4.7 s →
-    * 2.9–3.2 s steady, byte-identical row order (BitsetContainProbe).
+    * 2.9–3.2 s steady, byte-identical row order.
     * Scale: the exchange now carries one row per (x-member, rep-pair)
     * with the member ids as array payload — same ids, 5× fewer row
     * headers, and no second full-output pass; per-rep member arrays
@@ -396,7 +384,7 @@ object TextSimOps {
       // row. 128 buckets (not 64) because corpus docs carry 40-80
       // distinct tokens: at 64 bits the y-side density is ~70% and the
       // bound goes blunt; at 128 it stays ~45% dense and cuts ~2× more
-      // (CandCount-measured). Same window partition as rnk/c → no
+      // (measured candidate counts). Same window partition as rnk/c → no
       // extra shuffle, two BIGINTs wider.
       .withColumn("bm0", expr(
         "bit_or(CASE WHEN pmod(xxhash64(w), 128) < 64 THEN " +
@@ -524,7 +512,7 @@ object TextSimOps {
     // duplicate rows through the array attach + merge scan; the
     // post-verify distinct then becomes a no-op and is dropped
     // (verified rows of unique candidates are unique). sf0.1 A/B
-    // (ContainProbe shape): dedup-first 14.5 s vs verify-first 17-25 s.
+    // (key-level A/B): dedup-first 14.5 s vs verify-first 17-25 s.
     //
     // Threshold in single-occurrence form — (100+τ)·o ≥ τ·(ca+cb) ⟺
     // 100·o ≥ τ·(ca+cb−o) — so the pushed-down join residual evaluates
@@ -698,7 +686,7 @@ object TextSimOps {
         round6(lit(1.0) - col("inter").cast("double") /
           col("uni").cast("double")).as("dist"))
       // Deterministic presentation order. This global sort is now the
-      // key's ONLY large exchange (r11 ShuffleProbe: 30 of 31 MiB at
+      // key's ONLY large exchange (r11 shuffle trace: 30 of 31 MiB at
       // sf0.1 — the candidate+verify stage shuffles 1.2 MiB); both
       // costs are output-sized and exist solely for run-to-run
       // determinism of the dumped pair set; a 100 TB consumer feeding
@@ -1065,8 +1053,7 @@ object TextSimOps {
           // candidate dedup BEFORE the verify attach, post-verify
           // distinct dropped — same r10 re-measurement as exactWordPairs
           // (the dense regenerated corpus flipped r5's verify-first
-          // call): sf0.1 A/B 14.5 s dedup-first vs 17-25 s verify-first
-          // (ContainProbe).
+          // call): sf0.1 A/B 14.5 s dedup-first vs 17-25 s verify-first.
           containmentCandidatesFrom(ranked, tau).distinct()
             .join(dt.select(col("doc_id").as("da"), col("wh").as("wa"),
               col("c").as("ca")), "da")

@@ -1,6 +1,6 @@
 package graft
 
-/** Scratch-directory discipline shared by the scale probes (r13 + r14
+/** Scratch-directory discipline of the scale ladder (r13 + r14
   * reviews). A probe may only write into a directory it can PROVE is
   * probe scratch: a fresh path (the helper drops a sentinel file on
   * creation) or one carrying the sentinel from a previous probe run.

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The scratch-root contract behind the scale probes (r14 review):
+/** The scratch-root contract behind the scale ladder (r14 review):
   * write-time refusal on non-scratch roots, exception-safe cleanup. */
 class ProbeScratchSpec extends AnyFunSuite {
   private def tmp(): java.io.File =

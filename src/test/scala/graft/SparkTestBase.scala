@@ -3,22 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session for the whole forked test JVM (mirrors the
-  * driver harness config: UTC, small shuffle partitions, nanosAsLong). */
+/** One shared local session for the whole forked test JVM: the
+  * entry points' [[Harness.session]] at local[4]. */
 object TestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        s"/tmp/graft_warehouse_${System.getProperty("user.name")}")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Harness.session("4", conf = Map(
+    "spark.sql.warehouse.dir" ->
+      s"/tmp/graft_warehouse_${System.getProperty("user.name")}"))
   val sf: String = "/root/testdata/sf0.001"
 }
 
